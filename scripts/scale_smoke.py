@@ -153,7 +153,8 @@ QUERIES = [
     "ds12_cumulative_crossover",
     # t20: per-batch CDC merge — since r11 delta-pruned (only touched
     # buckets rewrite), so the ladder tracks users (×5 at 10×) +
-    # events, not epochs²; rewrite-BYTES evidence is cdc_rewrite_probe.
+    # events, not epochs²; rewrite-BYTES evidence is
+    # measurements/cdc_rewrite_probe_30x_r11.json.
     "t20_stream_cdc_upsert",
     # a15 (r11, VERDICT r10 item 5): two-exchange grouped-mode shape is
     # group-bounded — the rung proves the flatness claim.

@@ -1,8 +1,8 @@
 """Registered streaming queries (SURVEY.md §2.8 T1-T10, §2.3 J9/J10).
 
 Each callable executes a genuinely *streaming* pipeline (readStream →
-transform → writeStream with checkpoint) to completion under
-Trigger.AvailableNow, then returns the materialized result so the
+transform → ``sources.run_stream`` sink with checkpoint) to completion
+under Trigger.AvailableNow, then returns the materialized result so the
 driver harness can compare it. Queries whose streaming semantics are
 prefix-complete (complete-mode aggregation, inner joins, dedup over a
 fully-replayed bounded stream) carry a DuckDB oracle — the
@@ -27,9 +27,7 @@ from sparkstreaming_mq_spark.streaming.sources import (
     read_docs_stream_chunked,
     read_events_stream,
     read_events_stream_chunked,
-    run_stream_foreach_batch,
-    run_stream_to_parquet,
-    run_stream_to_table,
+    run_stream,
 )
 from sparkstreaming_mq_spark.tables import load_table
 
@@ -56,7 +54,7 @@ def s1_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 4).alias("value"),
         F.date_trunc("second", "ts").alias("ts_s"),
     )
-    return run_stream_to_table(stream, "append")
+    return spark.table(run_stream(stream, "memory", "append").name)
 
 
 # --- T2: tumbling window aggregation (complete mode → prefix-complete) -------
@@ -91,7 +89,7 @@ def t2_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"), F.sum(cents).alias("total_cents")
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(
         F.col("window.start").alias("win_start"), "event_type", "n", "total_cents"
     )
@@ -118,7 +116,7 @@ def t3_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(F.window("ts", "2 hours", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(F.col("window.start").alias("win_start"), "event_type", "n")
 
 
@@ -157,7 +155,7 @@ def t2_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumb_agg = tumb_stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"), F.sum(cents).alias("total_cents")
     )
-    tumb = run_stream_to_table(tumb_agg, "complete").select(
+    tumb = spark.table(run_stream(tumb_agg, "memory", "complete").name).select(
         F.lit("tumbling").alias("mode"),
         F.col("window.start").alias("win_start"),
         "event_type",
@@ -168,7 +166,7 @@ def t2_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     slide_agg = slide_stream.groupBy(F.window("ts", "2 hours", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
-    slide = run_stream_to_table(slide_agg, "complete").select(
+    slide = spark.table(run_stream(slide_agg, "memory", "complete").name).select(
         F.lit("sliding").alias("mode"),
         F.col("window.start").alias("win_start"),
         "event_type",
@@ -247,7 +245,7 @@ def t6_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_stream_to_table(agg, "append")
+    out = spark.table(run_stream(agg, "memory", "append").name)
     return out.select(F.col("window.start").alias("win_start"), "n")
 
 
@@ -271,7 +269,7 @@ def t5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.dropDuplicates(["event_id"]).select(
         "event_id", "event_type", F.round("value", 4).alias("value")
     )
-    return run_stream_to_table(deduped, "append")
+    return spark.table(run_stream(deduped, "memory", "append").name)
 
 
 # --- T4: session windows ------------------------------------------------------
@@ -331,7 +329,7 @@ def t4_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(
         "user_id",
         F.col("session_window.start").alias("sess_start"),
@@ -396,7 +394,7 @@ def t4d_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = run_stream_to_table(agg, "append")
+    out = spark.table(run_stream(agg, "memory", "append").name)
     return out.select(
         "user_id",
         F.col("session_window.start").alias("sess_start"),
@@ -431,7 +429,7 @@ def j9_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(F.col("n_name").alias("nation"), "event_type").agg(
         F.count("*").alias("n"), F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("total_cents")
     )
-    return run_stream_to_table(agg, "complete")
+    return spark.table(run_stream(agg, "memory", "complete").name)
 
 
 # --- J10: stream–stream join --------------------------------------------------
@@ -482,7 +480,7 @@ def j10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("second", "p_ts").alias("purchase_ts"),
         F.round("value", 4).alias("value"),
     )
-    return run_stream_to_table(joined, "append")
+    return spark.table(run_stream(joined, "memory", "append").name)
 
 
 # --- S6: file sink round-trip -------------------------------------------------
@@ -497,8 +495,11 @@ def s6_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet file sink (append mode + checkpoint WAL), then a batch
     read-back aggregation — the deliver-to-files leg of the archetype.
     """
+    import tempfile
+
     stream = read_events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    path = run_stream_to_parquet(stream)
+    path = tempfile.mkdtemp(prefix="sparkgraft_out_")
+    run_stream(stream, "parquet", path=path, state_partitions=None)
     return (
         spark.read.parquet(path)
         .groupBy("event_type")
@@ -536,7 +537,7 @@ def s7_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    run_stream_foreach_batch(stream, deliver)
+    run_stream(stream, deliver, state_partitions=None)
     log = spark.read.parquet(store)
     # upsert compaction: last write per key wins (idempotent replays)
     from pyspark.sql import Window
@@ -564,10 +565,9 @@ def s2_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic ticking test source: rate-micro-batch emits a
     deterministic value sequence per batch; one triggered batch of
     1000 rows. (The driver passes sf_dir; the rate source ignores it
-    by design — it generates its own data.)"""
-    import tempfile
-    import uuid as _uuid
-
+    by design — it generates its own data.) Under AvailableNow the
+    source plans exactly one batch, because its end offset is fixed at
+    start + rowsPerBatch."""
     stream = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 1000)
@@ -575,18 +575,7 @@ def s2_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .select("value")
     )
-    name = f"rate_{_uuid.uuid4().hex[:10]}"
-    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(once=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return spark.table(run_stream(stream, "memory").name)
 
 
 # --- S4: JSON / CSV file scans -------------------------------------------------
@@ -713,7 +702,7 @@ def t5b_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "event_type", F.round("value", 4).alias("value")
     )
-    return run_stream_to_table(deduped, "append")
+    return spark.table(run_stream(deduped, "memory", "append").name)
 
 
 # --- T4b: dynamic-gap session windows ------------------------------------------
@@ -772,7 +761,7 @@ def t4b_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", gap), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    out = run_stream_to_table(agg, "append")
+    out = spark.table(run_stream(agg, "memory", "append").name)
     return out.select(
         "user_id",
         F.date_trunc("second", F.col("session_window.start")).alias("sess_start"),
@@ -814,7 +803,7 @@ def t8_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     output mode whose scored evidence can be value-exact."""
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time")
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    return run_stream_to_table(agg, "update")
+    return spark.table(run_stream(agg, "memory", "update").name)
 
 
 # --- S9: checkpoint recovery across restarts ------------------------------------
@@ -850,34 +839,33 @@ def s9_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = _tf.mkdtemp(prefix="sparkgraft_live_")
     out = _tf.mkdtemp(prefix="sparkgraft_recov_out_")
     ckpt = _tf.mkdtemp(prefix="sparkgraft_recov_ckpt_")
+    stream = (
+        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(f"{live}/chunk_*")
+        .select("event_id", "event_type", F.round("value", 4).alias("value"))
+    )
 
     def run_once() -> None:
-        stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(f"{live}/chunk_*")
-            .select("event_id", "event_type", F.round("value", 4).alias("value"))
+        run_stream(
+            stream, "parquet", checkpoint=ckpt, path=out, state_partitions=None
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     names = sorted(
         n for n in __import__("os").listdir(chunks) if n.startswith("chunk_")
     )
-    for n in names[:2]:
-        shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
-    run_once()  # run 1: first two chunks
-    for n in names[2:]:
-        shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
-    run_once()  # run 2: same checkpoint — picks up only the new files
+    try:
+        for n in names[:2]:
+            shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
+        run_once()  # run 1: first two chunks
+        for n in names[2:]:
+            shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
+        run_once()  # run 2: same checkpoint — picks up only the new files
+    finally:
+        # the output dir stays: the returned frame reads it lazily
+        shutil.rmtree(live, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out)
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in µs
@@ -1017,7 +1005,7 @@ def t7_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    res = run_stream_to_table(out, "append")
+    res = spark.table(run_stream(out, "memory", "append").name)
     return res.select(
         "user_id",
         F.timestamp_micros("start_us").alias("sess_start"),
@@ -1096,7 +1084,7 @@ def t7b_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    return run_stream_to_table(out, "update")
+    return spark.table(run_stream(out, "memory", "update").name)
 
 
 # --- T10: stream monitoring ---------------------------------------------------
@@ -1124,23 +1112,10 @@ def t10_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     no trailing no-data batch under AvailableNow, verified), so the
     progress log's input counts equal the chunk sizes, which the
     oracle re-derives from the same ntile assignment."""
-    import tempfile
-    import uuid as _uuid
-
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "event_id", "event_type"
     )
-    name = f"prog_{_uuid.uuid4().hex[:10]}"
-    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_stream(stream, "memory")
     rows = [
         (int(p["batchId"]), int(p["numInputRows"]))
         for p in (q.recentProgress or [])
@@ -1337,7 +1312,7 @@ def s10_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump({"version": epoch_id + 1, "path": dst}, f)
         os.replace(tmp, manifest)
 
-    run_stream_foreach_batch(stream, merge_epoch)
+    run_stream(stream, merge_epoch, state_partitions=None)
     with open(manifest) as f:
         final = json.load(f)
     return spark.read.parquet(final["path"])
@@ -1392,7 +1367,7 @@ def t11_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = stream.groupBy(F.window("ts", "1 day"), "event_type").agg(
             F.count("*").alias("n"), F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("total_cents")
         )
-        out = run_stream_to_table(agg, "complete")
+        out = spark.table(run_stream(agg, "memory", "complete").name)
         # materialize before restoring the provider conf (the memory
         # sink is already complete after awaitTermination, but keep the
         # read inside the override for clarity)
@@ -1455,7 +1430,7 @@ def j10b_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("second", "p_ts").alias("purchase_ts"),
         F.round("value", 4).alias("value"),
     )
-    return run_stream_to_table(joined, "append")
+    return spark.table(run_stream(joined, "memory", "append").name)
 
 
 # --- S11: multi-topic fan-in (union of streams) -------------------------------
@@ -1491,7 +1466,7 @@ def s11_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = unioned.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count("*").alias("n")
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(
         F.col("window.start").alias("day_start"), "event_type", "n"
     )
@@ -1609,7 +1584,7 @@ def s12b_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents"
         ),
     )
-    return run_stream_to_table(agg, "complete")
+    return spark.table(run_stream(agg, "memory", "complete").name)
 
 
 # --- S13: streaming decontamination against a static corpus -------------------
@@ -1660,10 +1635,8 @@ def s13_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("digest", F.sha2("text", 256))
     )
     fresh = crawl.join(F.broadcast(corpus), "digest", "left_anti")
-    out = run_stream_to_table(
-        fresh.select("doc_id", "lang", "source", "digest"), "append"
-    )
-    return out
+    q = run_stream(fresh.select("doc_id", "lang", "source", "digest"), "memory")
+    return spark.table(q.name)
 
 
 # --- T12: sketch aggregation inside streaming state ---------------------------
@@ -1695,7 +1668,7 @@ def t12_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(F.window("ts", "1 hour")).agg(
         F.expr("hll_sketch_estimate(hll_sketch_agg(user_id, 14))").alias("n_users")
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(F.col("window.start").alias("win_start"), "n_users")
 
 
@@ -1720,13 +1693,15 @@ def t13_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream computed: complete-mode counts per event type equal the
     batch GROUP BY. At 100 TB the reader scans state shards in
     parallel exactly like any other data source — state debugging
-    scales with the state, not the stream."""
+    scales with the state, not the stream. The checkpoint is passed in,
+    so the runner keeps it: the ``statestore`` read is lazy and needs
+    it after the stream has ended."""
     import tempfile
 
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time")
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    run_stream_to_table(agg, "complete", checkpoint=ckpt)
+    ckpt = tempfile.mkdtemp(prefix="sparkgraft_state_")
+    run_stream(agg, "memory", "complete", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -1915,7 +1890,7 @@ def s14_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return run_stream_to_table(out, "append")
+    return spark.table(run_stream(out, "memory", "append").name)
 
 
 # --- T14: chained stateful operators (multi-agg in one streaming query) ------
@@ -1998,7 +1973,7 @@ def t14_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("total_cents"),
         )
     )
-    out = run_stream_to_table(daily, "append")
+    out = spark.table(run_stream(daily, "memory", "append").name)
     return out.select(
         F.col("window.start").alias("day_start"),
         "event_type",
@@ -2110,7 +2085,7 @@ def t15_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = joined.groupBy(F.window("p_ts", "1 day")).agg(
         F.count("*").alias("n_pairs"), F.sum(cents).alias("total_cents")
     )
-    out = run_stream_to_table(daily, "append")
+    out = spark.table(run_stream(daily, "memory", "append").name)
     return out.select(
         F.col("window.start").alias("day_start"), "n_pairs", "total_cents"
     )
@@ -2217,7 +2192,7 @@ def t19_bucketed_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = joined.groupBy(F.window("p_ts", "1 day")).agg(
         F.count("*").alias("n_pairs"), F.sum(cents).alias("total_cents")
     )
-    out = run_stream_to_table(daily, "append")
+    out = spark.table(run_stream(daily, "memory", "append").name)
     return out.select(
         F.col("window.start").alias("day_start"), "n_pairs", "total_cents"
     )
@@ -2277,7 +2252,7 @@ def t16_union_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = dedup.groupBy(F.window("ts", "1 day")).agg(
         F.count("*").alias("n_events")
     )
-    out = run_stream_to_table(daily, "append")
+    out = spark.table(run_stream(daily, "memory", "append").name)
     return out.select(F.col("window.start").alias("day_start"), "n_events")
 
 
@@ -2380,7 +2355,7 @@ def j10c_stream_outer_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("second", "p_ts").alias("purchase_ts"),
         F.round("value", 4).alias("value"),
     )
-    return run_stream_to_table(joined, "append")
+    return spark.table(run_stream(joined, "memory", "append").name)
 
 
 # --- J10d: skew-resistant (time-bucketed) stream-stream LEFT OUTER join ------
@@ -2487,7 +2462,7 @@ def j10d_bucketed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("second", "p_ts").alias("purchase_ts"),
         F.round("value", 4).alias("value"),
     )
-    return run_stream_to_table(joined, "append")
+    return spark.table(run_stream(joined, "memory", "append").name)
 
 
 # --- S15: dead-letter routing (contract-validated side outputs) ---------------
@@ -2576,7 +2551,7 @@ def s15_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(dlq_store, f"__epoch={epoch_id}")
         )
 
-    run_stream_foreach_batch(stream, route)
+    run_stream(stream, route, state_partitions=None)
 
     main = (
         spark.read.parquet(main_store)
@@ -2706,7 +2681,7 @@ def t17_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    res = run_stream_to_table(raw, "append")
+    res = spark.table(run_stream(raw, "memory", "append").name)
     gap = F.col("purchase_us") - F.col("touch_us")
     in_window = F.col("touch_us").isNotNull() & (gap <= 7 * 24 * 3600 * 1_000_000)
     return res.select(
@@ -2772,7 +2747,7 @@ def s16_stream_seek_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents"
         ),
     )
-    return run_stream_to_table(agg, "complete")
+    return spark.table(run_stream(agg, "memory", "complete").name)
 
 
 # --- S17: streaming ingest-integrity fingerprint ------------------------------
@@ -2817,10 +2792,6 @@ def s17_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from sparkstreaming_mq_spark.operators.audit import fingerprint_fold
-    from sparkstreaming_mq_spark.streaming.sources import (
-        read_events_stream_chunked,
-        run_stream_foreach_batch,
-    )
 
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "event_id", "user_id", "event_type", "value"
@@ -2848,7 +2819,7 @@ def s17_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    run_stream_foreach_batch(stream, fold)
+    run_stream(stream, fold, state_partitions=None)
     log = spark.read.parquet(store)
     # retry idempotence: one partial per (epoch, bucket) — duplicates
     # from replayed epochs collapse before the merge
@@ -2912,7 +2883,7 @@ def s18_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_events"),
         F.sum(u).alias("_vu"),
     )
-    out = run_stream_to_table(agg, "complete")
+    out = spark.table(run_stream(agg, "memory", "complete").name)
     return out.select(
         "event_type",
         F.col("window.start").alias("bar_start"),
@@ -3256,10 +3227,10 @@ def s19_stream_gapfill(
     # the driver and measurably bursts the task-result transport at
     # the 10x smoke (752 MB single-block fetch). Doubles round-trip
     # parquet bit-exactly, so oracle parity is unaffected.
-    from sparkstreaming_mq_spark.streaming.sources import _stream_partitions
+    import tempfile
 
-    with _stream_partitions(spark, S19_STATE_PARTITIONS):
-        path = run_stream_to_parquet(res)
+    path = tempfile.mkdtemp(prefix="sparkgraft_out_")
+    run_stream(res, "parquet", path=path, state_partitions=S19_STATE_PARTITIONS)
     return spark.read.parquet(path)
 
 
@@ -3436,7 +3407,7 @@ def j16_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("state_at_time", "event_type").agg(
         F.count("*").cast("long").alias("n")
     )
-    return run_stream_to_table(agg, "complete")
+    return spark.table(run_stream(agg, "memory", "complete").name)
 
 
 # --- RocksDB + changelog checkpointing on the HEAVY stateful chains -----------
@@ -3596,7 +3567,7 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    res = run_stream_to_table(out, "update")
+    res = spark.table(run_stream(out, "memory", "update").name)
     # final estimate per week = the emission carrying the full sketch
     # (n_vals strictly increases within a week, so max is unique)
     w = Window.partitionBy("week").orderBy(F.desc("n_vals"))
@@ -3643,9 +3614,9 @@ def cdc_upsert_run(
     stream: DataFrame,
     n_buckets: int = T20_BUCKETS,
 ) -> tuple[DataFrame, list[dict], dict[int, dict[int, str]]]:
-    """Delta-pruned streaming MERGE engine (shared by t20 and the scale
-    measurement script). The keyed store is hash-bucketed by user_id
-    into ``n_buckets`` files; each epoch rewrites ONLY the buckets that
+    """Delta-pruned streaming MERGE engine (shared by t20 and its
+    tests). The keyed store is hash-bucketed by user_id into
+    ``n_buckets`` files; each epoch rewrites ONLY the buckets that
     contain an arriving key and carries every untouched bucket forward
     as a pointer in a per-epoch manifest — per-epoch write work is
     O(|store ∩ touched buckets|), bounded by O(|delta keys| × avg
@@ -3738,7 +3709,7 @@ def cdc_upsert_run(
             }
         )
 
-    run_stream_foreach_batch(stream, apply_batch)
+    run_stream(stream, apply_batch, state_partitions=None)
     if not manifests:  # zero-batch stream (ADVICE r10 IndexError guard)
         return spark.createDataFrame([], stream.schema), stats, manifests
     last = manifests[max(manifests)]
@@ -4003,7 +3974,7 @@ def t21_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream_chunked(
         spark, sf_dir, n_chunks=T21_CHUNKS, order="time"
     ).select("ts", "event_id", "value")
-    run_stream_foreach_batch(stream, score)
+    run_stream(stream, score, state_partitions=None)
     return spark.read.parquet(log_dir).select("epoch", "n_rows", "drift_ppm")
 
 
@@ -4243,7 +4214,7 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_stream_to_table(out, "append")
+    return spark.table(run_stream(out, "memory", "append").name)
 
 
 @query("t22b_rocksdb_heavy_hitters", oracle=_t22_oracle())
@@ -4500,4 +4471,6 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         s21_parts = int(_parts_env)
     else:
         s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
-    return run_stream_to_table(res, "append", state_partitions=s21_parts)
+    return spark.table(
+        run_stream(res, "memory", "append", state_partitions=s21_parts).name
+    )

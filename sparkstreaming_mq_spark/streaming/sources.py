@@ -10,16 +10,23 @@ Scale notes: the file source checkpoints file offsets exactly like the
 kafka source checkpoints partition offsets, so every downstream
 operator behaves identically on a real queue; ``maxFilesPerTrigger``
 plays the role of ``maxOffsetsPerTrigger`` for bounded micro-batches.
+
+Every stream runs through ``run_stream``. Checkpoint ownership: a
+checkpoint the runner creates is deleted when the run ends, failed or
+not; a checkpoint the caller passes is kept, because the caller still
+needs it (a restart on the same WAL, or a lazy ``statestore`` read).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -91,7 +98,6 @@ def _write_chunk_files(
     mtimes (the old scheme) could collide at ms resolution.
     """
     import glob
-    import shutil
     import time
 
     tmp = os.path.join(out, "_build")
@@ -249,86 +255,62 @@ def read_docs_stream_chunked(
 STREAM_SHUFFLE_PARTITIONS = 2
 
 
-class _stream_partitions:
-    """Temporarily pin spark.sql.shuffle.partitions for a streaming
-    run (the stateful operator freezes the value at query start)."""
-
-    def __init__(self, spark: SparkSession, n: int | None = None):
-        self.spark = spark
-        # None -> the tiny-state fixture profile. Output-heavy stateful
-        # operators (s19's row generation) pass their own count: their
-        # cost is writing the generated rows, not state maintenance,
-        # so MORE partitions win at every measured scale (s19 10x:
-        # 2 -> 112 s, 8 -> 33 s, 32 -> 16 s; gates insensitive).
-        self.n = STREAM_SHUFFLE_PARTITIONS if n is None else n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
-def run_stream_to_table(
-    stream_df: DataFrame,
+def run_stream(
+    df: DataFrame,
+    sink,
     output_mode: str = "append",
+    *,
     checkpoint: str | None = None,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion with
-    Trigger.AvailableNow into a memory sink (S5) and return the result
-    as a batch DataFrame. Checkpoint directory (S9) gives the run the
-    same offset/commit WAL a production query has; pass ``checkpoint``
-    to use a known location (e.g. for post-run state inspection).
-    ``state_partitions`` overrides the tiny-state fixture profile for
-    operators whose state-group count is input-sized (the s19 rule) —
-    None keeps the measured 2-partition local default."""
-    spark = stream_df.sparkSession
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    with _stream_partitions(spark, state_partitions):
+    path: str | None = None,
+    state_partitions: int | None = STREAM_SHUFFLE_PARTITIONS,
+) -> StreamingQuery:
+    """Run a streaming DataFrame to completion under
+    Trigger.AvailableNow and return the terminated query — the one
+    start/await path every streaming query in the engine goes through.
+
+    ``sink`` is ``"memory"`` (S5: read the result back with
+    ``spark.table(q.name)``), ``"parquet"`` (S6: append-mode files
+    under ``path``) or a foreachBatch callable ``fn(batch_df,
+    epoch_id)`` (S7: the idempotent-upsert extension point). The
+    checkpoint (S9) gives every run the offset/commit WAL a production
+    query has; see the module docstring for who deletes it.
+
+    ``state_partitions`` pins spark.sql.shuffle.partitions for the run
+    (a stateful operator freezes the value into its checkpoint at
+    query start). The default is the tiny-state fixture profile;
+    operators whose state-group count or output is input-sized pass
+    their own count — their cost is the per-group work or writing the
+    generated rows, not state maintenance, so MORE partitions win at
+    every measured scale (s19 10x: 2 -> 112 s, 8 -> 33 s, 32 -> 16 s;
+    gates insensitive). None keeps the session's value."""
+    spark = df.sparkSession
+    writer = df.writeStream.queryName(f"sink_{uuid.uuid4().hex[:12]}")
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif sink == "parquet":
+        writer = writer.format("parquet").option("path", path)
+    elif sink == "memory":
+        writer = writer.format("memory")
+    else:
+        raise ValueError(f"unknown sink {sink!r}")
+    owned = checkpoint is None
+    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_") if owned else checkpoint
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+            writer.outputMode(output_mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    return spark.table(name)
-
-
-def run_stream_to_parquet(stream_df: DataFrame, path: str | None = None) -> str:
-    """S6 file sink: append-mode parquet delivery with checkpoint;
-    returns the output path."""
-    path = path or tempfile.mkdtemp(prefix="sparkgraft_out_")
-    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return path
-
-
-def run_stream_foreach_batch(stream_df: DataFrame, fn) -> None:
-    """S7 external-delivery sink: per-micro-batch callback
-    ``fn(batch_df, epoch_id)`` — the idempotent-upsert extension point
-    (batch_df is a normal DataFrame; epoch_id keys retries)."""
-    ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if owned:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return q
 
 
 # --- Kafka connector builders (S1/S8 proper; need kafka jars on the cluster) --

@@ -14,7 +14,7 @@ OPERATOR_TO_SCORED = {
     "S2": ["s2_rate_source"],
     "S3": ["q01_pricing_summary"],
     "S4": ["s4_json_csv_scan"],
-    "S5": ["s1_stream_replay"],  # memory sink in run_stream_to_table
+    "S5": ["s1_stream_replay"],  # memory sink via run_stream
     "S6": ["s9_checkpoint_recovery"],
     "S7": ["s7_stream_foreachbatch"],
     "S8": ["s8_python_mq_sink"],
